@@ -142,12 +142,6 @@ def main() -> None:
         timed("bm25_q1_after_page2",
               lambda: searcher.after(bag_q1, k=10, after=_cur).collect(),
               repeats=2)
-    # round-5 segment-colocated solo ranker (rank-identical; no decoded-
-    # row exchange) — at 2.4M docs it undercuts the plain warm path 3.6x
-    # (BENCH_SERVE); measured here at sf scale for the round record
-    timed("bm25_q1_colocated",
-          lambda: searcher.bm25_colocated(bm25_queries["bm25_q1"],
-                                          k=10).collect(), repeats=2)
     # round-5 impact-ordered early termination (exact top-k): projection
     # built untimed (an opt-in aux index, like the Searcher warm); the
     # probe is the serving-path metric. Guarded — bench must never crash.

@@ -7,7 +7,9 @@ measures the warm latency of each query family on a Searcher-warmed
 monolithic index and the federated path over plain (cold-dictionary)
 shard indexes:
 
-* bm25_hot / bm25_mid   — exhaustive BM25, hot-term and mid-df bags
+* bm25_hot_auto / bm25_mid_colocated
+                        — Searcher.bm25 (the colocated kernel), hot-term
+                          and mid-df bags
 * boolean_full          — must + must-not + wildcard in one plan
                           (Searcher.boolean; wildcard expands off the
                           prefix projection)
@@ -117,18 +119,10 @@ def main() -> None:
 
     results: dict = {}
     with Searcher(spark, mono) as s:
-        # route="plain" pins the row-join baseline rows (round-3/4
-        # continuity); the auto row below is what Searcher.bm25 now
-        # serves by default at this scale (colocated, routed by the
-        # stored doc count)
-        _timed(lambda: s.bm25(" ".join(HOT), k=10,
-                              route="plain").collect(),
-               "bm25_hot", results)
-        _timed(lambda: s.bm25(" ".join(MID), k=10,
-                              route="plain").collect(),
-               "bm25_mid", results)
         _timed(lambda: s.bm25(" ".join(HOT), k=10).collect(),
                "bm25_hot_auto", results)
+        _timed(lambda: s.bm25(" ".join(MID), k=10).collect(),
+               "bm25_mid_colocated", results)
         _timed(lambda: s.boolean(HOT, must=["tree"], exclude=["heap"],
                                  wildcards=["mer*"], k=10).collect(),
                "boolean_full", results)
@@ -138,22 +132,6 @@ def main() -> None:
         _timed(lambda: bm25_topk_batch(spark, s.index, BATCH,
                                        k=10).collect(),
                "batch10", results)
-        # round-5 segment-colocated SOLO ranker: per-doc aggregation
-        # folded into the decode partition — must be rank-identical to
-        # bm25_hot/bm25_mid (asserted) and is expected to undercut them
-        # (no decoded-row exchange)
-        hot_plain = [(r["doc_id"], round(r["score"], 9)) for r in
-                     s.bm25(" ".join(HOT), k=10,
-                            route="plain").collect()]
-        hot_colo = [(r["doc_id"], round(r["score"], 9)) for r in
-                    s.bm25_colocated(" ".join(HOT), k=10).collect()]
-        if hot_colo != hot_plain:
-            raise SystemExit(f"COLOCATED MISMATCH: {hot_colo[:3]} "
-                             f"vs {hot_plain[:3]}")
-        _timed(lambda: s.bm25_colocated(" ".join(HOT), k=10).collect(),
-               "bm25_hot_colocated", results)
-        _timed(lambda: s.bm25_colocated(" ".join(MID), k=10).collect(),
-               "bm25_mid_colocated", results)
         mono_top = [(r["doc_id"], round(r["score"], 9)) for r in
                     bm25_topk_tokens(spark, mono, HOT, k=20).collect()]
 
@@ -163,8 +141,8 @@ def main() -> None:
     if fed_top != mono_top:
         raise SystemExit(f"FEDERATED MISMATCH at {n_docs} docs: "
                          f"{fed_top[:3]} vs {mono_top[:3]}")
-    # warm tier on BOTH sides (bm25_hot ran inside Searcher with cached
-    # postings + dict-hit idf): federated_hot must go through
+    # warm tier on BOTH sides (bm25_hot_auto ran inside Searcher with
+    # cached postings + dict-hit idf): federated_hot must go through
     # FederatedSearcher or the ratio conflates caching with federation
     # overhead
     with FederatedSearcher(spark, shards) as fs:
@@ -180,7 +158,7 @@ def main() -> None:
         "federated_matches_monolithic_top20": True,
         "federated_overhead":
             round(results["federated_hot"]["p50_sec"]
-                  / results["bm25_hot"]["p50_sec"], 3),
+                  / results["bm25_hot_auto"]["p50_sec"], 3),
     }
     with open(os.path.join(REPO, "BENCH_SERVE.json"), "w") as f:
         json.dump(payload, f, indent=1)

@@ -200,14 +200,12 @@ def main(argv: list[str] | None = None) -> int:
                         "--after page's last row — in ranking order; "
                         "every page costs one probe regardless of "
                         "depth, unlike OFFSET. Start with '--after "
-                        "start' (page 1): cursors are only valid from "
-                        "pages this path served — the after-filter "
-                        "recomputes scores and compares the cursor "
-                        "with exact equality, and the plain ranker's "
-                        "hash-agg sum can sit 1 ulp off the pagination "
-                        "path's deterministic fold, re-serving or "
-                        "skipping the boundary row. Plain-term default "
-                        "path; composes with --snippets")
+                        "start' (page 1); the after-filter recomputes "
+                        "scores and compares the cursor with exact "
+                        "equality, so a cursor from any plain query's "
+                        "output is exact too (one term-ordered scoring "
+                        "kernel). Plain-term default path; composes "
+                        "with --snippets")
     q.add_argument("--proximity", type=float, default=None, metavar="W",
                    help="proximity-boosted ranking: score = BM25 + "
                         "W/(1+min_dist) where min_dist is the closest "
@@ -532,11 +530,12 @@ def main(argv: list[str] | None = None) -> int:
     t.add_argument("--bpe-max-words", type=int, default=1_000_000)
 
     args = p.parse_args(argv)
-    if args.cmd == "build":
+    if args.cmd in ("build", "reshard"):
         if args.ngram_size < 2:
             p.error(f"--ngram-size must be >= 2 (got {args.ngram_size})")
         if args.ngram_index and args.no_wildcard_index:
             p.error("--ngram-index conflicts with --no-wildcard-index")
+    if args.cmd == "build":
         if args.shards < 1:
             p.error(f"--shards must be >= 1 (got {args.shards})")
         if args.shards > 1 and args.resumable:
@@ -1336,20 +1335,9 @@ def main(argv: list[str] | None = None) -> int:
                         exclude=ex_terms, k=args.k,
                         important_weight=w_imp)
                 else:
-                    # plain solo query: same metadata route as the warm
-                    # Searcher — the colocated kernel also wins COLD
-                    # (measured at 2.4M: 0.7-1.0 s vs 1.3-4.7 s), both
-                    # routes rank-identical
-                    from .operators.search import (
-                        bm25_topk_colocated_tokens, route_solo)
-                    if route_solo(index["stats"]) == "colocated":
-                        out = bm25_topk_colocated_tokens(
-                            spark, index, q_terms, k=args.k,
-                            important_weight=w_imp)
-                    else:
-                        out = bm25_topk_tokens(
-                            spark, index, q_terms, k=args.k,
-                            important_weight=w_imp)
+                    out = bm25_topk_tokens(
+                        spark, index, q_terms, k=args.k,
+                        important_weight=w_imp)
                 if args.snippets:
                     out = _attach_snippets(
                         out, q_terms,

@@ -368,25 +368,18 @@ _BATCH_BAGS = {
 
 
 def bm25_batch_topk(spark, sf_dir):
-    """Batch BM25: three queries scored in ONE job (union-term probe +
-    broadcast per-query weights + one aggregation + per-query window
-    rank — operators/search.bm25_scores_batch). The eval-workload shape:
-    shared terms decode once for all queries. Oracle-paired with the
-    same (query_id, term) VALUES bag, duplicates carrying bag-semantics
-    multiplicity on both sides."""
+    """Batch BM25: three queries scored in ONE job through the public
+    batch ranker (operators/search.bm25_topk_batch, token-level face
+    bm25_topk_batch_tokens: the bags are raw tokens of the simple-profile
+    entry index, so they skip the query analyzer). The eval-workload
+    shape: shared terms decode once for all queries. Oracle-paired with
+    the same (query_id, term) VALUES bag, duplicates carrying
+    bag-semantics multiplicity on both sides."""
     idx = entry_index(spark, sf_dir)
-    union_terms = sorted({t for bag in _BATCH_BAGS.values() for t in bag})
-    rows = S.query_term_postings(idx["postings"], union_terms,
-                                 int(idx["stats"]["n_buckets"]))
-    scores = S.bm25_scores_batch(rows, idx["terms"],
-                                 float(idx["stats"]["avgdl"]), _BATCH_BAGS)
-    wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                 F.asc("doc_id"))
-    return (scores.withColumn("rank", F.row_number().over(wnd))
-            .filter(F.col("rank") <= 10)
-            .select("query_id", "doc_id", _r(F.col("score"))
-                    .alias("score_r"), F.col("rank").cast("int")
-                    .alias("rank")))
+    out = S.bm25_topk_batch_tokens(spark, idx, _BATCH_BAGS, k=10)
+    return out.select("query_id", "doc_id", _r(F.col("score"))
+                      .alias("score_r"), F.col("rank").cast("int")
+                      .alias("rank"))
 
 
 def multimodal_meta(spark, sf_dir):
@@ -4441,8 +4434,8 @@ def federated_bm25_batch_topk(spark, sf_dir):
     """Federated twin of bm25_batch_topk (operators/federate.py): the
     same three query bags scored across the two parity shards in ONE
     pass per shard — union-term probes with each shard's own bucket
-    pruning, GLOBAL idf×multiplicity weights broadcast once, one
-    (query_id, doc_id) aggregation, per-query window rank. Oracle: the
+    pruning, GLOBAL idf×multiplicity weights in each shard's colocated
+    kernel, one per-query window rank. Oracle: the
     UNMODIFIED monolithic batch SQL (ORACLE_SQL['bm25_batch_topk']) —
     federation must be invisible in the eval workload too."""
     from .operators.federate import federated_bm25_topk_batch_tokens
@@ -4518,16 +4511,12 @@ def bm25_search_after(spark, sf_dir):
     one top-k regardless of depth, unlike the reference's LIMIT/OFFSET
     (QueryResultsFetcher.java) whose cost grows linearly with the page
     number. The cursor is derived the way a client would: from the last
-    row of page 1 SERVED BY THE PAGINATION PATH (after=None — the CLI's
-    `--after start`). That is the search_after contract (Elasticsearch's
-    too: cursors are the sort values a previous page OF THE SAME PATH
-    returned): the after-filter recomputes scores with the deterministic
-    term-ordered fold and compares the cursor float with exact equality,
-    so a cursor taken from the plain hash-agg ranker can sit 1 ulp off
-    and re-serve or skip the boundary row — this entry caught exactly
-    that before the page-1 source was corrected. Oracle: DuckDB ranks
-    ALL scored docs once and emits rows 21-40 — the offset formulation
-    it must equal."""
+    row of page 1 (after=None — the CLI's `--after start`). The
+    after-filter recomputes scores with the colocated kernel's
+    term-ordered fold and compares the cursor float with exact
+    equality, so the recompute must be bitwise — which the one kernel
+    guarantees. Oracle: DuckDB ranks ALL scored docs once and emits
+    rows 21-40 — the offset formulation it must equal."""
     idx = entry_index(spark, sf_dir)
     p1 = S.bm25_topk_after(spark, idx, QT, k=20).collect()
     cur = (p1[-1]["score"], p1[-1]["doc_id"])
@@ -4557,7 +4546,7 @@ def federated_bm25_after_topk(spark, sf_dir):
     """Federated search_after (operators/federate.py
     federated_bm25_topk_after): page 2 of the fixed query ACROSS the two
     parity shards — page 1 served by the federated pagination path, its
-    (score, doc_id) cursor feeding the page-2 probe. The deterministic
+    (score, doc_id) cursor feeding the page-2 probe. The kernel's
     term-ordered fold makes the cursor recompute bitwise AND keeps
     federation invisible bitwise, so the oracle is the UNMODIFIED
     monolithic OFFSET SQL (ORACLE_SQL['bm25_search_after']): a pass
@@ -4753,8 +4742,8 @@ def bm25_batch_colocated_topk(spark, sf_dir):
     and accumulates every query's per-doc partials in numpy (term-ordered
     fold), and only n_segments × |Q| × k candidate rows reach the global
     per-query window. Same _BATCH_BAGS and the same oracle as
-    bm25_batch_topk — the two plans must be row-identical; this entry
-    pins the kernel against DuckDB independently of the row-join plan."""
+    bm25_batch_topk; this entry pins the kernel's own output, without
+    the public ranker's chunking."""
     idx = entry_index(spark, sf_dir)
     cand = S.bm25_scores_batch_colocated(idx, _BATCH_BAGS, k=10)
     wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),

@@ -30,9 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analysis import PROFILES
-from .search import (_pruned_postings, binary_postings,
-                     bm25_topk_colocated_tokens, bm25_topk_tokens,
-                     query_idf, route_solo)
+from .search import (_pruned_postings, binary_postings, bm25_topk_tokens,
+                     query_idf)
 
 
 def _match_doc_ids(index: dict, terms: list[str], mode: str) -> DataFrame:
@@ -106,12 +105,8 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
     Returns (term string, fg_df long, df long, score_r double) — the
     top-``top_terms`` rows, score rounded to 6 decimals."""
     uniq_q = set(dict.fromkeys(q_terms))
-    # foreground ranking rides the engine's own metadata route (the
-    # colocated kernel wins at every measured size, rank-identical)
-    fg_fn = (bm25_topk_colocated_tokens
-             if route_solo(index["stats"]) == "colocated"
-             else bm25_topk_tokens)
-    fg_rows = fg_fn(spark, index, list(q_terms), int(k_docs)).collect()
+    fg_rows = bm25_topk_tokens(spark, index, list(q_terms),
+                               int(k_docs)).collect()
     out_schema = "term string, fg_df long, df long, score_r double"
     if not fg_rows:
         return spark.createDataFrame([], out_schema)

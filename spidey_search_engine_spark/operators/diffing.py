@@ -101,7 +101,13 @@ def index_diff(a: dict, b: dict) -> dict:
     postings-metadata join (term/segment/bin-hash — position bytes ride
     inside `bin` and are hashed in-scan, never decoded). Bucket layout
     and file layout are deliberately IGNORED: n_buckets is a physical
-    routing choice, not index content."""
+    routing choice, not index content.
+
+    NOT compared: the sentinel partition (bucket == n_buckets, the
+    per-doc DOCLEN/DOCSHA rows — load_index prunes it from `postings`)
+    and the docs tables. Two indexes that differ only in per-doc
+    lengths, content hashes or docs metadata can report equal; the
+    stats check (n_docs, avgdl) covers doc lengths only in aggregate."""
     sa, sb = a["stats"], b["stats"]
     stats_equal = (int(sa["n_docs"]) == int(sb["n_docs"])
                    and float(sa["avgdl"]) == float(sb["avgdl"])

@@ -25,14 +25,17 @@ read here — using it would make a doc's score depend on which shard it
 landed in. Instead the k query terms' df rows are fetched per shard
 (the same Q1 pushdown lookup the single-index path does — k tiny scans,
 never a dictionary scan), summed driver-side, and the global idf×
-multiplicity weights enter the scoring stage as one literal map.
+multiplicity weights ride into the scoring kernel.
 
-Execution shape: per shard, the standard bucket-partition-pruned probe +
-vectorized segment decode (query_term_postings — each shard keeps its
-own n_buckets); the decoded row DataFrames union (no shuffle: union is
-plan-level concatenation); ONE hash aggregation on doc_id and ONE
-TakeOrderedAndProject produce the top-k. Cost = Σ per-shard probe bytes,
-identical to what a single index over the union would read.
+Execution shape: per shard, the single-index scorer itself
+(search.bm25_scores_batch_colocated — each shard keeps its own n_buckets
+and seg_bits) runs with the GLOBAL per-term weights and global avgdl;
+the per-shard candidate sets union (no shuffle: union is plan-level
+concatenation) and ONE TakeOrderedAndProject produces the top-k. A doc's
+postings live wholly in its shard and the kernel folds them in term
+order, so every score is bitwise equal to the monolithic one. Cost = Σ
+per-shard probe bytes, identical to what a single index over the union
+would read.
 
 Sharding contract: shards must be DISJOINT on doc_id — a doc present in
 two shards would sum its own partials twice. Operationally that means
@@ -62,13 +65,13 @@ from __future__ import annotations
 import math
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .search import (batch_term_weights, bm25_score_rows,
-                     query_idf,
-                     query_term_postings)
+from .search import (MAX_BROADCAST_CANDIDATES, _analyze_bags,
+                     _candidate_bound, _rank_batch, batch_term_weights,
+                     bm25_scores_batch_colocated, filter_doc_ids,
+                     query_idf, query_term_postings)
 
 
 def federated_stats(indexes: list[dict]) -> dict:
@@ -104,27 +107,45 @@ def federated_idf(indexes: list[dict], q_terms: list[str],
             for t, d in df_sum.items()}
 
 
-def federated_posting_rows(indexes: list[dict], q_terms: list[str],
-                           verify_disjoint: bool = False) -> DataFrame:
-    """Union of every shard's decoded posting rows for the query terms —
-    each shard probed with ITS OWN bucket layout (partition pruning per
-    shard), concatenated plan-level (union shuffles nothing)."""
-    rows = [query_term_postings(idx["postings"], q_terms,
-                                int(idx["stats"]["n_buckets"]))
-            for idx in indexes]
-    out = reduce(DataFrame.unionByName, rows)
+def federated_verify_disjoint(indexes: list[dict],
+                              q_terms: list[str]) -> None:
+    """Raise if any shard pair overlaps on THIS query: a (term, doc_id)
+    decoded from more than one shard is exactly the overlap that would
+    double-count the query's partials. One standalone query-bounded job
+    over each shard's pruned, decoded rows (the scoring kernel never
+    materializes per-(term, doc) rows to check against)."""
+    rows = reduce(DataFrame.unionByName,
+                  [query_term_postings(idx["postings"], q_terms,
+                                       int(idx["stats"]["n_buckets"]))
+                   for idx in indexes])
+    dup = (rows.groupBy("term", "doc_id").count()
+           .filter(F.col("count") > 1).limit(1).collect())
+    if dup:
+        raise ValueError(
+            f"shards overlap: doc_id={dup[0]['doc_id']} carries "
+            f"term={dup[0]['term']!r} in more than one shard — "
+            f"federated scores would double-count; fix the sharding")
+
+
+def _federated_scored(indexes: list[dict], q_terms: list[str],
+                      important_weight: float, verify_disjoint: bool,
+                      gstats: dict, k: int | None) -> DataFrame:
+    """(doc_id, score) candidates of one term bag across shards: the
+    colocated kernel per shard with GLOBAL weights and avgdl, unioned.
+    `k` is the per-segment cut; None keeps every scored doc (each
+    shard's own 2^seg_bits), for the surfaces that filter the full
+    scored set before their top-k."""
+    idf = federated_idf(indexes, q_terms, n_docs=gstats["n_docs"])
+    qrows = batch_term_weights({"q": q_terms}, idf)
     if verify_disjoint:
-        # a (term, doc_id) pair decoded from >1 shard is exactly the
-        # overlap that would double-count THIS query's partials; the
-        # check is query-bounded (runs over the already-pruned rows)
-        dup = (out.groupBy("term", "doc_id").count()
-               .filter(F.col("count") > 1).limit(1).collect())
-        if dup:
-            raise ValueError(
-                f"shards overlap: doc_id={dup[0]['doc_id']} carries "
-                f"term={dup[0]['term']!r} in more than one shard — "
-                f"federated scores would double-count; fix the sharding")
-    return out
+        federated_verify_disjoint(indexes, q_terms)
+    parts = [bm25_scores_batch_colocated(
+        idx, {"q": list(q_terms)},
+        k if k is not None else 1 << int(idx["stats"]["seg_bits"]),
+        important_weight=important_weight, qrows=qrows,
+        avgdl=float(gstats["avgdl"]))
+        for idx in indexes]
+    return reduce(DataFrame.unionByName, parts).select("doc_id", "score")
 
 
 def federated_bm25_topk_tokens(spark: SparkSession, indexes: list[dict],
@@ -151,16 +172,12 @@ def federated_bm25_topk_tokens(spark: SparkSession, indexes: list[dict],
         return spark.createDataFrame([], "doc_id long, score double")
     if gstats is None:
         gstats = federated_stats(indexes)
-    idf = federated_idf(indexes, q_terms, n_docs=gstats["n_docs"])
-    weights = pd.Series(q_terms).value_counts()
-    iw = {t: idf[t] * float(weights[t]) for t in idf}
-    rows = federated_posting_rows(indexes, q_terms,
-                                  verify_disjoint=verify_disjoint)
-    scores = bm25_score_rows(rows, iw, gstats["avgdl"],
-                             important_weight=important_weight)
+    # a filter drops candidates after scoring, so it needs every scored
+    # doc; the plain top-k needs only each segment's top k
+    scores = _federated_scored(indexes, q_terms, important_weight,
+                               verify_disjoint, gstats,
+                               None if filters else k)
     if filters:
-        from .search import (MAX_BROADCAST_CANDIDATES, _candidate_bound,
-                             filter_doc_ids)
         keep = reduce(DataFrame.unionByName,
                       [filter_doc_ids(idx["docs"], filters)
                        for idx in indexes])
@@ -194,15 +211,9 @@ def federated_bm25_topk_batch_tokens(
     wholly in its shard, the kernel folds them in the same term order
     with the same weights/avgdl, so every partial sum is bitwise equal —
     the CLI round-trip test diffs raw floats. Batches past
-    BATCH_CHUNK_QUERIES chunk exactly like the single-index path. The
-    string wrapper and the oracle-paired entry both call THIS — one
-    pipeline, no copy to drift."""
-    from functools import reduce as _reduce
-
-    from pyspark.sql import DataFrame as _DF
-    from pyspark.sql import Window
-
-    from .search import BATCH_CHUNK_QUERIES, bm25_scores_batch_colocated
+    BATCH_CHUNK_QUERIES chunk and rank exactly like the single-index
+    path (search._rank_batch). The string wrapper and the oracle-paired
+    entry both call THIS — one pipeline, no copy to drift."""
     if not indexes:
         raise ValueError("federated query needs at least one shard")
     bags = {qid: bag for qid, bag in bags.items() if bag}
@@ -215,21 +226,11 @@ def federated_bm25_topk_batch_tokens(
     idf = federated_idf(indexes, union_terms, n_docs=gstats["n_docs"])
     qrows = batch_term_weights(bags, idf)
     if verify_disjoint:
-        # the overlap check is a standalone query-bounded job over the
-        # decoded union rows (the colocated kernel never materializes
-        # per-(term, doc) rows to check against)
-        federated_posting_rows(indexes, union_terms, verify_disjoint=True)
-    qids = sorted(bags)
-    chunks = [dict((q, bags[q]) for q in qids[i:i + BATCH_CHUNK_QUERIES])
-              for i in range(0, len(qids), BATCH_CHUNK_QUERIES)]
-    parts = [bm25_scores_batch_colocated(idx, chunk, k, qrows=qrows,
-                                         avgdl=float(gstats["avgdl"]))
-             for chunk in chunks for idx in indexes]
-    cand = _reduce(_DF.unionByName, parts)
-    wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                 F.asc("doc_id"))
-    return (cand.withColumn("rank", F.row_number().over(wnd))
-            .filter(F.col("rank") <= k))
+        federated_verify_disjoint(indexes, union_terms)
+    return _rank_batch(spark, bags, k, lambda chunk: [
+        bm25_scores_batch_colocated(idx, chunk, k, qrows=qrows,
+                                    avgdl=float(gstats["avgdl"]))
+        for idx in indexes])
 
 
 def federated_bm25_topk_batch(spark: SparkSession, indexes: list[dict],
@@ -241,16 +242,9 @@ def federated_bm25_topk_batch(spark: SparkSession, indexes: list[dict],
     hot terms decode once per shard regardless of how many queries use
     them. Same invariant as the single-query path: byte-identical to
     bm25_topk_batch over the monolithic union index."""
-    from ..functions.analysis import analyze_query
-    bags: dict[str, list[str]] = {}
-    for qid, qtext in queries.items():
-        q_terms, phrases = analyze_query(qtext)
-        for p in phrases:
-            q_terms.extend(p)
-        if q_terms:
-            bags[qid] = q_terms
     return federated_bm25_topk_batch_tokens(
-        spark, indexes, bags, k=k, verify_disjoint=verify_disjoint)
+        spark, indexes, _analyze_bags(queries), k=k,
+        verify_disjoint=verify_disjoint)
 
 
 def federated_bm25_topk(spark: SparkSession, indexes: list[dict],
@@ -281,31 +275,22 @@ def federated_bm25_topk_after(spark: SparkSession, indexes: list[dict],
     an OFFSET over the federated result would sort and discard P·k rows
     re-merged from every shard.
 
-    Scores fold per-doc partials in TERM order (bm25_score_rows
-    deterministic=True — the same fold the single-index pagination path
-    uses), which makes the cursor sound twice over: (a) the page-N+1
-    recompute is bitwise equal to the page-N score the cursor carries,
-    and (b) federation stays invisible BITWISE — the monolithic fold
-    sorts the same (term, partial) structs, partials are bitwise equal
-    (global idf/avgdl, the FED invariant), so a cursor from a federated
-    page is valid against the monolithic index and vice versa (pinned
-    by test). after=None is page 1 — pagination sessions start HERE
-    (the CLI's `--after start`), never from the plain hash-agg ranker
-    whose sum can sit 1 ulp off the fold."""
+    Scores come from the same colocated kernel as the single-index
+    path, which folds per-doc partials in TERM order with global
+    weights and avgdl. That makes the cursor sound twice over: (a) the
+    page-N+1 recompute is bitwise equal to the page-N score the cursor
+    carries, and (b) federation stays invisible BITWISE, so a cursor
+    from a federated page is valid against the monolithic index and
+    vice versa (pinned by test). after=None is page 1 and equals
+    federated_bm25_topk_tokens' page bitwise."""
     if not indexes:
         raise ValueError("federated query needs at least one shard")
     if not q_terms:
         return spark.createDataFrame([], "doc_id long, score double")
     if gstats is None:
         gstats = federated_stats(indexes)
-    idf = federated_idf(indexes, q_terms, n_docs=gstats["n_docs"])
-    weights = pd.Series(q_terms).value_counts()
-    iw = {t: idf[t] * float(weights[t]) for t in idf}
-    rows = federated_posting_rows(indexes, q_terms,
-                                  verify_disjoint=verify_disjoint)
-    scores = bm25_score_rows(rows, iw, gstats["avgdl"],
-                             important_weight=important_weight,
-                             deterministic=True)
+    scores = _federated_scored(indexes, q_terms, important_weight,
+                               verify_disjoint, gstats, None)
     if after is not None:
         s0, d0 = float(after[0]), int(after[1])
         scores = scores.filter(
@@ -379,25 +364,17 @@ class FederatedSearcher:
               after: tuple[float, int] | None = None,
               important_weight: float = 1.0) -> DataFrame:
         """search_after pagination across the warmed shards — after=None
-        is page 1 (serve pagination sessions from here, not bm25_tokens:
-        the cursor recompute is exact-equality against the deterministic
-        fold). Cached global stats + per-shard idf_cache keep a warm
-        deep page at one planned job, same as page 1."""
+        is page 1, bitwise equal to bm25_tokens' page, so either page's
+        cursor is exact. Cached global stats + per-shard idf_cache keep
+        a warm deep page at one planned job, same as page 1."""
         return federated_bm25_topk_after(
             self.spark, self.shards, q_terms, k=k, after=after,
             important_weight=important_weight, gstats=self.gstats)
 
     def batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
-        from ..functions.analysis import analyze_query
-        bags: dict[str, list[str]] = {}
-        for qid, qtext in queries.items():
-            q_terms, phrases = analyze_query(qtext)
-            for p in phrases:
-                q_terms.extend(p)
-            if q_terms:
-                bags[qid] = q_terms
         return federated_bm25_topk_batch_tokens(
-            self.spark, self.shards, bags, k=k, gstats=self.gstats)
+            self.spark, self.shards, _analyze_bags(queries), k=k,
+            gstats=self.gstats)
 
     def close(self) -> None:
         for s in self._searchers:

@@ -34,15 +34,19 @@ def ranking_eval(results: DataFrame, judgments: DataFrame,
     `results`: (query_id, doc_id, rank) with rank 1-based — any ranker's
     page (rows past `rank > k` are ignored so a deeper page can be
     evaluated at several cutoffs). `judgments`: (query_id, doc_id,
-    grade); missing (query, doc) pairs grade 0. Queries present in
-    `results` but absent from `judgments` score 0 across the board;
-    queries only in `judgments` are not emitted (nothing was served)."""
+    grade); missing (query, doc) pairs grade 0, and duplicate
+    (query, doc) judgments count once, at their max grade. Queries
+    present in `results` but absent from `judgments` score 0 across the
+    board; queries only in `judgments` are not emitted (nothing was
+    served)."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
     r = (results.filter(F.col("rank") <= k)
          .select("query_id", "doc_id", "rank"))
-    j = judgments.select("query_id", "doc_id",
-                         F.col("grade").cast("double").alias("grade"))
+    # one grade per (query, doc) before both the join and the ideal-DCG
+    # window, or a repeated judgment inflates DCG, n_rel and idcg
+    j = (judgments.groupBy("query_id", "doc_id")
+         .agg(F.max(F.col("grade").cast("double")).alias("grade")))
     scored = (r.join(j, ["query_id", "doc_id"], "left")
               .withColumn("grade", F.coalesce("grade", F.lit(0.0))))
     gain = (F.pow(F.lit(2.0), F.col("grade")) - 1.0) / \

@@ -16,15 +16,20 @@ Two rankers over the same postings:
   tie-break.
 
 Plan shape: the q-term filter prunes postings partitions by `bucket`
-(Q1 — the MySQL hash-index analog), a pandas UDF decodes segments to
-(doc_id, tf, dl[, positions]) Arrow batches, scores are built-in column
-expressions (JVM/codegen), per-doc rollup is a hash agg, and the top-k is
-TakeOrderedAndProject — no driver-side per-row loops, no full-corpus pass
-beyond the q-term postings themselves.
+(Q1 — the MySQL hash-index analog). Every token-level BM25 surface then
+scores on ONE kernel (bm25_scores_batch_colocated): the compressed
+segment rows shuffle by `segment`, and one Arrow batch per partition
+decodes, folds each doc's partials in term order and emits the
+per-segment top-k; the global top-k is TakeOrderedAndProject over those
+candidates — no driver-side per-row loops, no full-corpus pass beyond the
+q-term postings themselves. Rankers that need decoded rows (parity,
+proximity, explain, synonym, block-max) decode segments to
+(doc_id, tf, dl[, positions]) rows and score with column expressions.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -235,8 +240,7 @@ def query_term_weights(terms_df: DataFrame, query_terms: list[str],
 def bm25_scores(posting_rows: DataFrame, terms_df: DataFrame, avgdl: float,
                 query_terms: list[str],
                 idf_cache: dict | None = None,
-                important_weight: float = 1.0,
-                deterministic: bool = False) -> DataFrame:
+                important_weight: float = 1.0) -> DataFrame:
     """Per-doc BM25 over decoded posting rows. Duplicate query terms weight
     by multiplicity (bag semantics, matching the reference's repeated
     OR-columns, QueryResultsFetcher.java:239-240).
@@ -256,29 +260,18 @@ def bm25_scores(posting_rows: DataFrame, terms_df: DataFrame, avgdl: float,
     unchanged)."""
     iw = query_term_weights(terms_df, query_terms, idf_cache)
     return bm25_score_rows(posting_rows, iw, avgdl,
-                           important_weight=important_weight,
-                           deterministic=deterministic)
+                           important_weight=important_weight)
 
 
 def bm25_score_rows(posting_rows: DataFrame, iw: dict[str, float],
                     avgdl: float,
-                    important_weight: float = 1.0,
-                    deterministic: bool = False) -> DataFrame:
+                    important_weight: float = 1.0) -> DataFrame:
     """The scoring tail of bm25_scores with the per-term weights (idf ×
-    bag multiplicity) supplied by the CALLER — the single-index path
-    derives them from the shard's own dictionary; the federated path
-    (operators/federate.py) derives them from GLOBAL df/N so shard-local
-    statistics never leak into the score.
-
-    ``deterministic=True`` folds each doc's per-term partials in TERM
-    order (array_sort over the collected (term, partial) structs) instead
-    of the plain hash-agg ``F.sum``, whose merge order follows shuffle
-    fetch order and can move a double sum by 1 ulp between jobs. Bitwise-
-    reproducible scores are what makes an exact-equality cursor sound —
-    the search_after path requires it; every other ranker keeps the plain
-    sum (one hash agg, no collect_list) because they never compare a
-    recomputed score against a stored float. Per-doc group size is
-    ≤ |query terms|, so the fold costs a few adds per doc either way."""
+    bag multiplicity) supplied by the CALLER, for the rankers whose
+    output needs decoded rows (proximity, block-max, impact rescore).
+    The per-doc sum is a hash agg, so its merge order — and the last ulp
+    of a score — can follow shuffle fetch order; token-level top-k,
+    pagination and filtering score on the colocated kernel instead."""
     if not iw:
         return (posting_rows.sparkSession
                 .createDataFrame([], "doc_id long, score double"))
@@ -293,48 +286,43 @@ def bm25_score_rows(posting_rows: DataFrame, iw: dict[str, float],
         m[F.col("term")] * (tf_eff * (K1 + 1)) /
         (tf_eff + K1 * (1 - B + B * F.col("dl") / F.lit(avgdl)))
     ).filter(F.col("partial").isNotNull())
-    if deterministic:
-        # (term, doc) rows are unique post-merge, so term order is a
-        # total order and the left fold is bitwise reproducible.
-        return scored.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct("term", "partial"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["partial"]).alias("score"))
     return scored.groupBy("doc_id").agg(F.sum("partial").alias("score"))
 
 
 def _bm25_scored_tokens(spark: SparkSession, index: dict,
                         q_terms: list[str],
                         important_weight: float = 1.0,
-                        deterministic: bool = False) -> DataFrame:
-    """Shared prune → decode → score prefix for every token-level BM25
-    variant (plain, --fuzzy, --not, --must, wildcard, --boost-important) —
-    one place for the idf-cache / bag-multiplicity behavior."""
+                        k: int | None = None) -> DataFrame:
+    """(doc_id, score) candidates of one term bag from the colocated
+    kernel (bm25_scores_batch_colocated) — the shared prefix of every
+    token-level BM25 surface, one place for the idf-cache /
+    bag-multiplicity behavior. `k` is the kernel's per-segment cut: the
+    top-k surfaces pass their page size; k=None keeps EVERY scored doc
+    (a segment holds at most 2^seg_bits docs), which the surfaces that
+    filter the full scored set before their top-k need — search_after,
+    boolean must/exclude, filtered, collapse — so their joins, cursor
+    filter and windows see the exact set."""
     if not q_terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    rows = query_term_postings(index["postings"], q_terms,
-                               int(index["stats"]["n_buckets"]))
-    return bm25_scores(rows, index["terms"],
-                       float(index["stats"]["avgdl"]), q_terms,
-                       index.get("idf_cache"),
-                       important_weight=important_weight,
-                       deterministic=deterministic)
+    if k is None:
+        k = 1 << int(index["stats"]["seg_bits"])
+    return bm25_scores_batch_colocated(
+        index, {"q": list(q_terms)}, k,
+        important_weight=important_weight).select("doc_id", "score")
 
 
 def bm25_topk_tokens(spark: SparkSession, index: dict,
                      q_terms: list[str], k: int = 10,
                      important_weight: float = 1.0) -> DataFrame:
-    """The post-analysis tail of `bm25_topk`: prune → decode → score →
-    TakeOrderedAndProject top-k over an already-analyzed term bag. Shared
-    by the default and --fuzzy CLI paths so token rewriting (typo
-    correction) composes with EXACTLY the scoring/tie-break/empty-query
-    behavior the default path has — any change here changes both.
-    `important_weight` is the BM25F-lite boost (see bm25_scores); 1.0
-    (default) leaves the plan byte-identical to the unweighted ranker."""
+    """The post-analysis tail of `bm25_topk`: prune → colocated kernel
+    (per-segment top-k) → TakeOrderedAndProject top-k over an
+    already-analyzed term bag. Shared by the default and --fuzzy CLI
+    paths so token rewriting (typo correction) composes with EXACTLY the
+    scoring/tie-break/empty-query behavior the default path has — any
+    change here changes both. `important_weight` is the BM25F-lite boost
+    (see bm25_scores); 1.0 (default) is unweighted BM25."""
     scores = _bm25_scored_tokens(spark, index, q_terms,
-                                 important_weight=important_weight)
+                                 important_weight=important_weight, k=k)
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -345,8 +333,8 @@ def bm25_topk_after(spark: SparkSession, index: dict,
     """Stateless deep pagination (the Elasticsearch `search_after`
     pattern): page N+1 = the top-k rows STRICTLY AFTER the cursor — the
     (score, doc_id) of page N's last row — in the ranking order
-    (score DESC, doc_id ASC). after=None is page 1 and is byte-identical
-    to bm25_topk_tokens (pinned by test).
+    (score DESC, doc_id ASC). after=None is page 1 and equals
+    bm25_topk_tokens bitwise (pinned by test).
 
     The reference paginates by OFFSET (Q8/Q9 two-stage top-k + LIMIT/
     OFFSET in the serving SQL, QueryResultsFetcher.java) — fine at 10
@@ -358,19 +346,14 @@ def bm25_topk_after(spark: SparkSession, index: dict,
     of depth — the only pagination that survives a 10^12-doc corpus.
 
     The cursor compares a RECOMPUTED score against page N's stored float
-    with exact equality, so this path scores with deterministic=True
-    (term-ordered fold, bm25_score_rows): a plain hash-agg F.sum merges
-    per-term partials in shuffle-fetch order, and a 1-ulp drift between
-    the page-N and page-N+1 jobs would make a boundary-tied doc vanish
-    (recomputes above s0: fails both branches) or duplicate (recomputes
-    below: passes score<s0). With bitwise-reproducible scores the strict
-    (score <, or ==score and doc_id >) composite comparison paginates
-    ties without loss or duplication; page 1 stays rank-identical to
-    bm25_topk_tokens with scores equal up to summation order (pinned at
-    9 decimals by test)."""
+    with exact equality. That is sound because the colocated kernel
+    folds each doc's partials in term order, so every job recomputes a
+    score bitwise; the strict (score <, or ==score and doc_id >)
+    composite comparison then paginates ties without loss or
+    duplication. The cursor filter needs the full scored set, so the
+    kernel runs with no per-segment cut (see _bm25_scored_tokens)."""
     scores = _bm25_scored_tokens(spark, index, q_terms,
-                                 important_weight=important_weight,
-                                 deterministic=True)
+                                 important_weight=important_weight)
     if after is not None:
         s0, d0 = float(after[0]), int(after[1])
         scores = scores.filter(
@@ -389,23 +372,6 @@ def bm25_topk(spark: SparkSession, index: dict, query: str, k: int = 10) -> Data
     return bm25_topk_tokens(spark, index, q_terms, k)
 
 
-def bm25_scores_batch(posting_rows: DataFrame, terms_df: DataFrame,
-                      avgdl: float, term_bags: dict[str, list[str]],
-                      idf_cache: dict | None = None) -> DataFrame:
-    """(query_id, doc_id, score) — BM25 for MANY queries in one pass.
-
-    `posting_rows` must cover the UNION of all bags' terms (one decode of
-    each shared hot term serves every query that uses it). Per-query
-    weights (idf × multiplicity, bag semantics as bm25_scores) form a tiny
-    (query_id, term, w) DataFrame broadcast INTO the decoded rows — the
-    batch analog of the single-query literal map. One shuffle on
-    (query_id, doc_id) scores everything."""
-    union_terms = sorted({t for bag in term_bags.values() for t in bag})
-    idf = query_idf(terms_df, union_terms, "idf_bm25", idf_cache)
-    return bm25_score_rows_batch(posting_rows,
-                                 batch_term_weights(term_bags, idf), avgdl)
-
-
 def batch_term_weights(term_bags: dict[str, list[str]],
                        idf: dict[str, float]) -> list[tuple]:
     """(query_id, term, idf×multiplicity) rows for a batch — bag
@@ -418,28 +384,6 @@ def batch_term_weights(term_bags: dict[str, list[str]],
     return qrows
 
 
-def bm25_score_rows_batch(posting_rows: DataFrame, qrows: list[tuple],
-                          avgdl: float) -> DataFrame:
-    """The batch scoring tail with the per-(query, term) weights supplied
-    by the CALLER — single-index callers derive them from the shard
-    dictionary (bm25_scores_batch); the federated path derives them from
-    global df/N (operators/federate.py). One broadcast of the tiny
-    weights table, one (query_id, doc_id) aggregation."""
-    spark = posting_rows.sparkSession
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double")
-    qdf = spark.createDataFrame(qrows, "query_id string, term string, "
-                                       "w double")
-    return (posting_rows.join(F.broadcast(qdf), "term")
-            .withColumn("partial",
-                        F.col("w") * (F.col("tf") * (K1 + 1)) /
-                        (F.col("tf") + K1 * (1 - B + B * F.col("dl")
-                                             / F.lit(avgdl))))
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("partial").alias("score")))
-
-
 def _analyze_bags(queries: dict[str, str]) -> dict[str, list[str]]:
     bags: dict[str, list[str]] = {}
     for qid, qtext in queries.items():
@@ -449,31 +393,6 @@ def _analyze_bags(queries: dict[str, str]) -> dict[str, list[str]]:
         if q_terms:
             bags[qid] = q_terms
     return bags
-
-
-def bm25_topk_batch_rowjoin(spark: SparkSession, index: dict,
-                            queries: dict[str, str], k: int = 10) -> DataFrame:
-    """The round-3 batch plan, kept for rank-identity tests and as the
-    shape reference: one decode of the union terms, broadcast of the
-    per-query weights fanned onto every decoded row, one
-    (query_id, doc_id) aggregation, one per-query window rank. Correct at
-    any scale, but the fan-out rows flow through TWO full exchanges —
-    measured 1.06 s/q at 2.4M docs (BENCH_SERVE r4), only 1.6× better
-    than solo. `bm25_topk_batch` (colocated kernel) replaces it."""
-    bags = _analyze_bags(queries)
-    if not bags:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
-    union_terms = sorted({t for bag in bags.values() for t in bag})
-    rows = query_term_postings(index["postings"], union_terms,
-                               int(index["stats"]["n_buckets"]))
-    scores = bm25_scores_batch(rows, index["terms"],
-                               float(index["stats"]["avgdl"]), bags,
-                               index.get("idf_cache"))
-    wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                 F.asc("doc_id"))
-    return (scores.withColumn("rank", F.row_number().over(wnd))
-            .filter(F.col("rank") <= k))
 
 
 # driver-side cap on queries scored per colocated job: the kernel's dense
@@ -498,18 +417,18 @@ def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
     accumulate every query's per-doc partials into a dense
     (n_queries, 2^seg_bits) array, emit the per-query top-k of the
     segment. The caller reduces n_segments × |Q| × k candidate rows to
-    the global per-query top-k (tiny).
+    the global per-query top-k (tiny); k >= 2^seg_bits emits every
+    scored doc.
 
-    Versus the row-join plan this removes BOTH full-row exchanges (the
-    (query_id, doc_id) aggregation of the weight-fanned decode and the
-    per-query window): per-doc accumulation happens in numpy inside the
-    partition that already holds ALL of the doc's query-term postings —
-    segments are doc-id-range aligned (build.py: segment = doc_id >>
-    seg_bits), so a doc's postings for every term co-locate after the one
-    bytes-shuffle. Accumulation iterates rows sorted (segment, term), so
-    each doc's partial sum is a TERM-ORDERED fold — bitwise reproducible
-    across runs and partitionings (same contract as the pagination
-    fold)."""
+    This is the engine's one BM25 scorer for token-level surfaces. No
+    decoded row is ever exchanged: per-doc accumulation happens in numpy
+    inside the partition that already holds ALL of the doc's query-term
+    postings — segments are doc-id-range aligned (build.py: segment =
+    doc_id >> seg_bits), so a doc's postings for every term co-locate
+    after the one bytes-shuffle. Accumulation iterates rows sorted
+    (segment, term), so each doc's partial sum is a TERM-ORDERED fold —
+    bitwise reproducible across runs, partitionings and shardings, which
+    is what makes an exact-equality search_after cursor sound."""
     stats = index["stats"]
     if avgdl is None:
         avgdl = float(stats["avgdl"])
@@ -524,8 +443,8 @@ def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
                         index.get("idf_cache"))
         qrows = batch_term_weights(bags, idf)
     else:
-        qrows = [r for r in qrows
-                 if r[0] in bags and r[1] in set(union_terms)]
+        union_set = set(union_terms)
+        qrows = [r for r in qrows if r[0] in bags and r[1] in union_set]
     spark = index["postings"].sparkSession
     if not qrows:
         return spark.createDataFrame(
@@ -559,12 +478,13 @@ def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
                 nz = np.flatnonzero(row)
                 if nz.size == 0:
                     continue
-                # (score DESC, doc_id ASC): lexsort's last key is primary
-                order = np.lexsort((nz, -row[nz]))[:kk]
-                sel = nz[order]
-                out_q.append(np.repeat(qids[i], sel.size))
-                out_d.append(base + sel.astype(np.int64))
-                out_s.append(row[sel])
+                if nz.size > kk:
+                    # (score DESC, doc_id ASC): lexsort's last key is
+                    # primary
+                    nz = nz[np.lexsort((nz, -row[nz]))[:kk]]
+                out_q.append(np.repeat(qids[i], nz.size))
+                out_d.append(base + nz.astype(np.int64))
+                out_s.append(row[nz])
             if not out_q:
                 return None
             return pd.DataFrame({
@@ -590,34 +510,18 @@ def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
                 tf = tfs.astype(np.float64)
                 if w_imp != 1.0:  # BM25F-lite: tf' enters num AND denom
                     tf = np.where(imp, tf * w_imp, tf)
-                impact = (tf * (K1 + 1)) / (
-                    tf + K1 * (1 - B + B * dls.astype(np.float64) / avgdl))
+                num = tf * (K1 + 1)
+                den = tf + K1 * (1 - B + B * dls.astype(np.float64) / avgdl)
                 for qi, w in subs:
-                    acc[qi, off] += w * impact
+                    # (w·num)/den: the row scorers' association, so a
+                    # partial agrees bitwise with bm25_score_rows'
+                    acc[qi, off] += w * num / den
         res = flush()
         if res is not None:
             yield res
 
     return pruned.mapInPandas(
         kernel, schema="query_id string, doc_id long, score double")
-
-
-def bm25_topk_colocated_tokens(spark: SparkSession, index: dict,
-                               q_terms: list[str], k: int = 10,
-                               important_weight: float = 1.0) -> DataFrame:
-    """Single-query face of the segment-colocated kernel: same ranking
-    contract as bm25_topk_tokens (score DESC, doc_id ASC, k rows) with
-    the per-doc aggregation folded into the decode partition — no
-    decoded-row exchange at all. The candidate set entering the final
-    TakeOrderedAndProject is n_segments × k rows. Scores match
-    bm25_topk_tokens up to summation order (term-ordered numpy fold vs
-    hash-agg; pinned at 9 decimals by test)."""
-    if not q_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    cand = bm25_scores_batch_colocated(index, {"q": list(q_terms)}, k,
-                                       important_weight=important_weight)
-    return (cand.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 def bm25_topk_batch(spark: SparkSession, index: dict,
@@ -629,22 +533,39 @@ def bm25_topk_batch(spark: SparkSession, index: dict,
     WindowGroupLimit input is already segment-top-k bounded). The eval-
     workload shape: shared hot terms decode once, per-query weights ride
     into the kernel as a closure, and per-doc aggregation never leaves
-    numpy. Batches past BATCH_CHUNK_QUERIES split into unioned chunk
-    plans to bound the kernel's dense accumulator. Ties break by doc_id
-    ASC per query (same discipline as bm25_topk); rank-identity with the
-    row-join plan is pinned by test."""
-    bags = _analyze_bags(queries)
+    numpy. Ties break by doc_id ASC per query (same discipline as
+    bm25_topk); rank identity with the brute-force oracle is pinned by
+    test."""
+    return bm25_topk_batch_tokens(spark, index, _analyze_bags(queries), k)
+
+
+def bm25_topk_batch_tokens(spark: SparkSession, index: dict,
+                           bags: dict[str, list[str]],
+                           k: int = 10) -> DataFrame:
+    """The post-analysis tail of bm25_topk_batch over already-analyzed
+    term bags (the bm25_topk/bm25_topk_tokens split, applied to the
+    batch shape)."""
+    return _rank_batch(
+        spark, bags, k,
+        lambda chunk: [bm25_scores_batch_colocated(index, chunk, k)])
+
+
+def _rank_batch(spark: SparkSession, bags: dict[str, list[str]], k: int,
+                score_chunk) -> DataFrame:
+    """(query_id, doc_id, score, rank) from kernel candidates:
+    `score_chunk(chunk_bags)` returns the candidate DataFrames of one
+    chunk (one per shard on the federated path). Batches past
+    BATCH_CHUNK_QUERIES split into unioned chunk plans to bound the
+    kernel's dense accumulator; one per-query window ranks the union."""
+    bags = {qid: bag for qid, bag in bags.items() if bag}
     if not bags:
         return spark.createDataFrame(
             [], "query_id string, doc_id long, score double, rank int")
     qids = sorted(bags)
-    chunks = [dict((q, bags[q]) for q in qids[i:i + BATCH_CHUNK_QUERIES])
-              for i in range(0, len(qids), BATCH_CHUNK_QUERIES)]
-    parts = [bm25_scores_batch_colocated(index, chunk, k)
-             for chunk in chunks]
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
+    parts = [p for i in range(0, len(qids), BATCH_CHUNK_QUERIES)
+             for p in score_chunk({q: bags[q]
+                                   for q in qids[i:i + BATCH_CHUNK_QUERIES]})]
+    cand = reduce(DataFrame.unionByName, parts)
     wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                  F.asc("doc_id"))
     return (cand.withColumn("rank", F.row_number().over(wnd))
@@ -678,31 +599,6 @@ def _ws_release(spark: SparkSession) -> None:
         del _ws_holds[id(spark)]
 
 
-# Solo-query routing (the ROUTE discipline: one cached metadata number,
-# never a measurement job). The segment-colocated kernel beat the
-# row-join plan at EVERY corpus size measured, warm AND cold
-# (BENCH_SOLO_ROUTE warm sweep: 5k 1.3 vs 1.9 s … 2.4M 0.39 vs 1.41 s;
-# cold at 2.4M: 0.7-1.0 vs 1.3-4.7 s) — the plan it removes is the
-# decoded-row exchange, which grows with df — so the floor only guards
-# the degenerate tiny-index case where the extra bytes-shuffle stage is
-# the whole cost. Env-overridable like the fuzzy crossover.
-SOLO_COLOCATED_MIN_DOCS = 1000
-
-
-def route_solo(stats: dict) -> str:
-    """'plain' or 'colocated' for a solo BM25 query, from the index's
-    STORED doc count (shared by the warm Searcher and the cold CLI
-    default path; SPIDEY_SOLO_ROUTE forces, SPIDEY_COLO_MIN_DOCS moves
-    the floor). Both routes are rank-identical (pinned by test)."""
-    import os
-    env = os.environ.get("SPIDEY_SOLO_ROUTE")
-    if env in ("plain", "colocated"):
-        return env
-    floor = int(os.environ.get("SPIDEY_COLO_MIN_DOCS",
-                               SOLO_COLOCATED_MIN_DOCS))
-    return "colocated" if int(stats["n_docs"]) >= floor else "plain"
-
-
 class Searcher:
     """Warm serving wrapper — amortizes per-query fixed costs across a query
     stream, the shape a real serving tier runs (the reference serves from a
@@ -721,7 +617,10 @@ class Searcher:
 
     Queries still run as ordinary jobs over the SAME operators
     (bm25_topk / bm25_topk_pruned / parity_search) — nothing is
-    re-implemented for serving."""
+    re-implemented for serving. Every token-level BM25 method (bm25,
+    bm25_batch, boolean, filtered, collapse, after) scores on the one
+    segment-colocated kernel, so a score is bitwise the same whichever
+    method served it."""
 
     # default driver-side dictionary-preload budget: above this many terms
     # the Searcher automatically switches to head-only preload (top df
@@ -826,30 +725,11 @@ class Searcher:
         else:
             self.index["terms"].count()
 
-    def _solo_route(self) -> str:
-        return route_solo(self.index["stats"])
-
-    def bm25(self, query: str, k: int = 10,
-             route: str | None = None) -> DataFrame:
-        """Warm solo BM25 — rank-identical on either route (pinned at 9
-        decimals by test); `route` forces "plain"/"colocated", None
-        auto-selects from the index's stored doc count."""
-        r = route or self._solo_route()
-        if r == "colocated":
-            return self.bm25_colocated(query, k)
+    def bm25(self, query: str, k: int = 10) -> DataFrame:
         return bm25_topk(self.spark, self.index, query, k)
 
     def bm25_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         return bm25_topk_batch(self.spark, self.index, queries, k)
-
-    def bm25_colocated(self, query: str, k: int = 10) -> DataFrame:
-        """Segment-colocated solo ranker (bm25_topk_colocated_tokens):
-        same ranking contract as bm25(); no decoded-row exchange."""
-        q_terms, phrases = analyze_query(query)
-        for p in phrases:
-            q_terms.extend(p)
-        return bm25_topk_colocated_tokens(self.spark, self.index,
-                                          q_terms, k)
 
     def bm25_pruned(self, query: str, k: int = 10, **kw) -> DataFrame:
         from .wand import bm25_topk_pruned
@@ -914,13 +794,12 @@ class Searcher:
               after: tuple[float, int] | None = None,
               important_weight: float = 1.0) -> DataFrame:
         """search_after pagination over the warmed index — after=None is
-        page 1 (serve pagination sessions from HERE, not from bm25():
-        the cursor filter recomputes the deterministic fold score and
-        compares the cursor with exact equality, and the plain ranker's
-        hash-agg sum can sit 1 ulp off). Same operator the CLI's
-        `--after start`/`--after SCORE:DOC_ID` path runs; the warmed
-        dictionary and postings caches serve every page, so deep pages
-        cost exactly what page 1 costs."""
+        page 1, equal to bm25()'s page bitwise (both score on the
+        term-ordered colocated kernel), so a cursor taken from either
+        stays exact. Same operator the CLI's `--after start`/`--after
+        SCORE:DOC_ID` path runs; the warmed dictionary and postings
+        caches serve every page, so deep pages cost exactly what page 1
+        costs."""
         return bm25_topk_after(self.spark, self.index, q_terms, k=k,
                                after=after,
                                important_weight=important_weight)
@@ -1140,8 +1019,8 @@ def bm25_proximity_topk(spark: SparkSession, index: dict,
     min_dist = closest co-occurrence of two DISTINCT query terms in the
     doc (docs without a co-occurring pair keep their plain BM25 score).
     `binary search` as adjacent tokens outranks a file that merely
-    mentions both words k lines apart; prox_weight=0 is byte-identical
-    to bm25_topk_tokens (pinned by test).
+    mentions both words k lines apart; prox_weight=0 is rank-identical
+    to bm25_topk_tokens, scores to 9 decimals (pinned by test).
 
     ONE pruned probe decoded WITH positions feeds both the shared
     scoring tail (tf/dl/important ride the same rows) and the distance
@@ -1506,16 +1385,15 @@ def bm25f_topk_tokens(spark: SparkSession, index: dict,
                       q_terms: list[str], k: int = 10,
                       important_weight: float = 2.0) -> DataFrame:
     """BM25F-lite top-k: the plain token-level BM25 tail with the A3
-    `important` field boost threaded through bm25_scores (tf' = tf·w for
+    `important` field boost threaded through the kernel (tf' = tf·w for
     important postings). w=1.0 is byte-identical to bm25_topk_tokens —
     pinned by test — so this is a strict extension, not a fork, of the
     primary ranker."""
     if important_weight <= 0:
         raise ValueError(
             f"important_weight must be > 0, got {important_weight}")
-    scores = _bm25_scored_tokens(spark, index, q_terms,
-                                 important_weight=important_weight)
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return bm25_topk_tokens(spark, index, q_terms, k,
+                            important_weight=important_weight)
 
 
 def filter_doc_ids(docs: DataFrame, filters: dict[str, object]) -> DataFrame:

@@ -36,10 +36,12 @@ class OracleIndex:
             self.df.update(c.keys())
         self.title_tokens = {d: set(tokenize_title(p)) for d, p, _ in docs}
 
-    def bm25_topk(self, query: str, k: int = 10):
-        words, phrases = analyze_query(query)
-        for p in phrases:
-            words.extend(p)
+    def bm25_scores(self, words: list[str],
+                    important_weight: float = 1.0) -> dict[int, float]:
+        """Every matching doc's BM25 over an analyzed term bag (a repeated
+        word counts once per occurrence). `important_weight` is the
+        BM25F-lite boost: tf·w for a word that is one of the doc's title
+        tokens."""
         scores: dict[int, float] = {}
         for d in self.tokens:
             s = 0.0
@@ -47,11 +49,24 @@ class OracleIndex:
                 tf = self.tf[d].get(w, 0)
                 if not tf:
                     continue
+                if w in self.title_tokens[d]:
+                    tf = tf * important_weight
                 idf = math.log((self.n_docs - self.df[w] + 0.5) / (self.df[w] + 0.5) + 1)
                 s += idf * tf * (K1 + 1) / (tf + K1 * (1 - B + B * self.dl[d] / self.avgdl))
             if s > 0:
                 scores[d] = s
+        return scores
+
+    @staticmethod
+    def ranked(scores: dict[int, float], k: int) -> list[tuple[int, float]]:
+        """Top-k (doc_id, score) by score DESC, doc_id ASC."""
         return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+
+    def bm25_topk(self, query: str, k: int = 10):
+        words, phrases = analyze_query(query)
+        for p in phrases:
+            words.extend(p)
+        return self.ranked(self.bm25_scores(words), k)
 
     def phrase_matches(self, d: int, phrase: list[str]) -> int:
         pos = self.positions[d]

@@ -113,3 +113,23 @@ def test_ranking_eval_k_cutoff_and_guard(spark):
         (31 / math.log2(4)) / (31 / math.log2(2)), abs=1e-12)
     with pytest.raises(ValueError):
         ranking_eval(results, judgments, k=0)
+
+
+def test_ranking_eval_duplicate_judgments(spark):
+    """A (query, doc) judged twice counts once, at its max grade: the
+    duplicate neither doubles the served doc's gain and P@k nor fills a
+    second ideal slot."""
+    from spidey_search_engine_spark.operators.rankeval import ranking_eval
+    results = spark.createDataFrame(
+        [("q", 1, 1), ("q", 2, 2)], "query_id string, doc_id long, rank int")
+    once = spark.createDataFrame(
+        [("q", 2, 2)], "query_id string, doc_id long, grade int")
+    twice = spark.createDataFrame(
+        [("q", 2, 2), ("q", 2, 1), ("q", 2, 2)],
+        "query_id string, doc_id long, grade int")
+    want = ranking_eval(results, once, k=2).collect()[0]
+    got = ranking_eval(results, twice, k=2).collect()[0]
+    assert got["ndcg"] == pytest.approx(1 / math.log2(3), abs=1e-12)
+    assert got["precision"] == pytest.approx(0.5)
+    assert (got["ndcg"], got["mrr"], got["precision"]) == \
+        (want["ndcg"], want["mrr"], want["precision"])

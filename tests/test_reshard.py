@@ -112,6 +112,24 @@ def test_reshard_guards(spark, tmp_path, mono):
         reshard_index(spark, [mono_dir], str(tmp_path / "z"), 64)
 
 
+def test_reshard_cli_flag_guards(tmp_path, mono, capsys):
+    """`reshard` rejects the n-gram flag combinations `build` rejects, at
+    parse time: nothing is written."""
+    import os
+
+    from spidey_search_engine_spark.cli import main
+    mono_dir, _ = mono
+    out = str(tmp_path / "rs")
+    base = ["reshard", "--input", mono_dir, "--output", out,
+            "--shards", "2"]
+    for bad in (base + ["--ngram-index", "--no-wildcard-index"],
+                base + ["--ngram-index", "--ngram-size", "1"]):
+        with pytest.raises(SystemExit):
+            main(bad)
+    assert "--ngram" in capsys.readouterr().err
+    assert not os.path.exists(out)
+
+
 def test_reshard_consolidates_streamed_nrt_delta(spark, corpus_pdf,
                                                  tmp_path):
     """The NRT maintenance story closes with reshard: a base index plus a

@@ -466,13 +466,11 @@ def test_bm25_proximity(spark, index, tmp_path):
 
 
 def test_bm25_search_after(spark, index, tmp_path):
-    """search_after pagination: page1=None-cursor is rank-identical to
-    the plain top-k (scores equal at 9 decimals — the pagination path
-    sums in deterministic term order so its cursor is bitwise
-    reproducible; the plain ranker keeps the hash-agg sum); stitched
-    pages equal the exact top-N with no loss or duplication, including
-    across a hand-built tie boundary; non-finite CLI cursors are
-    rejected."""
+    """search_after pagination: page1=None-cursor equals the plain
+    top-k (both score on the term-ordered colocated kernel, so the
+    cursor is bitwise reproducible); stitched pages equal the exact
+    top-N with no loss or duplication, including across a hand-built
+    tie boundary; non-finite CLI cursors are rejected."""
     from spidey_search_engine_spark.operators.build import (build_index,
                                                             load_index)
     from spidey_search_engine_spark.operators.search import (
@@ -524,12 +522,9 @@ def test_bm25_search_after(spark, index, tmp_path):
 
 def test_cli_after_start_stitch(spark, index, index_dir, capsys):
     """The CLI pagination contract end-to-end: page 1 comes from
-    `--after start` (the pagination path, deterministic fold), its
-    printed cursor feeds page 2, and the stitch equals the operator's
-    exact top-N. Cursors from the PLAIN ranker's output are not part of
-    the contract — its hash-agg sum can sit 1 ulp off the fold's
-    recompute and re-serve or skip the boundary row (the sf0.01 oracle
-    gate caught exactly that drift before `start` existed)."""
+    `--after start`, its printed cursor feeds page 2, and the stitch
+    equals the operator's exact top-N (json float repr round-trips the
+    kernel's bitwise-reproducible scores)."""
     import json
 
     from spidey_search_engine_spark.cli import main as cli_main
@@ -772,11 +767,24 @@ def test_cli_filter_collapse_syn(spark, corpus_pdf, tmp_path, capsys):
     capsys.readouterr()
 
 
-def test_bm25_batch_colocated_equals_rowjoin(spark, index, monkeypatch):
-    """The segment-colocated batch kernel and the round-3 row-join plan
-    must be row-identical (ids, 10-decimal scores, ranks) — including
-    when the batch splits into unioned chunk plans (chunk cap forced to
-    2 so 4 queries exercise the union path)."""
+def _assert_oracle(got, exp):
+    """Doc ids and ranks exact, scores to 9 decimals."""
+    assert [d for d, _ in got] == [d for d, _ in exp]
+    assert [round(s, 9) for _, s in got] == [round(s, 9) for _, s in exp]
+
+
+@pytest.fixture(scope="module")
+def meta(corpus_pdf):
+    """doc_id -> (lang, repo), doc ids ordered as the oracle's."""
+    ordered = corpus_pdf.sort_values(["repo", "path"]).reset_index(drop=True)
+    return dict(enumerate(zip(ordered["lang"], ordered["repo"])))
+
+
+def test_bm25_batch_matches_oracle(spark, index, oracle, monkeypatch):
+    """The batch ranker returns, per query, the oracle's top-k (ids and
+    ranks exact, scores to 9 decimals) — including when the batch
+    splits into unioned chunk plans (chunk cap forced to 2 so 4 queries
+    exercise the union path) and a duplicated query term."""
     from spidey_search_engine_spark.operators import search as S
     queries = {
         "q1": "merge sort",
@@ -784,38 +792,89 @@ def test_bm25_batch_colocated_equals_rowjoin(spark, index, monkeypatch):
         "q3": "merge merge data",
         "q4": "fast heap",
     }
-
-    def rows(df):
-        return sorted((r["query_id"], r["doc_id"], round(r["score"], 10),
-                       r["rank"]) for r in df.collect())
-
     monkeypatch.setattr(S, "BATCH_CHUNK_QUERIES", 2)
-    got = rows(S.bm25_topk_batch(spark, index, queries, k=8))
-    want = rows(S.bm25_topk_batch_rowjoin(spark, index, queries, k=8))
-    assert got == want and got
+    by_q = {}
+    for r in S.bm25_topk_batch(spark, index, queries, k=8).collect():
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert set(by_q) == set(queries)
+    for qid, q in queries.items():
+        got = sorted(by_q[qid], key=lambda r: r["rank"])
+        assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
+        _assert_oracle([(r["doc_id"], r["score"]) for r in got],
+                       oracle.bm25_topk(q, k=8))
 
 
-def test_bm25_colocated_solo_equals_plain(spark, index):
-    """Solo colocated ranker: rank-identical to bm25_topk_tokens with
-    scores equal at 9 decimals (term-ordered numpy fold vs hash-agg),
-    including the BM25F important-field boost and the empty-query /
-    unknown-term edges; via Searcher too."""
+def test_bm25_solo_matches_oracle(spark, index, oracle):
+    """Solo ranker on the colocated kernel == the oracle, including bag
+    multiplicity, the BM25F important-field boost (bm25f_topk_tokens at
+    w=1 is bm25_topk_tokens bitwise) and the empty-bag / unknown-term
+    edges; via Searcher too."""
     from spidey_search_engine_spark.operators.search import (
-        Searcher, bm25_topk_colocated_tokens, bm25_topk_tokens)
+        Searcher, bm25_topk_tokens, bm25f_topk_tokens)
 
     def rows(df):
-        return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
 
     for bag in (["merg", "sort"], ["merg", "merg", "data"], ["fast"]):
-        assert rows(bm25_topk_colocated_tokens(spark, index, bag, k=8)) \
-            == rows(bm25_topk_tokens(spark, index, bag, k=8)), bag
-    assert rows(bm25_topk_colocated_tokens(
-        spark, index, ["merg", "sort"], k=8, important_weight=2.5)) == \
-        rows(bm25_topk_tokens(spark, index, ["merg", "sort"], k=8,
-                              important_weight=2.5))
-    assert bm25_topk_colocated_tokens(spark, index, [], k=8).count() == 0
-    assert bm25_topk_colocated_tokens(
+        _assert_oracle(rows(bm25_topk_tokens(spark, index, bag, k=8)),
+                       oracle.ranked(oracle.bm25_scores(bag), 8))
+    boosted = rows(bm25_topk_tokens(spark, index, ["merg", "sort"], k=8,
+                                    important_weight=2.5))
+    _assert_oracle(boosted, oracle.ranked(
+        oracle.bm25_scores(["merg", "sort"], important_weight=2.5), 8))
+    assert rows(bm25f_topk_tokens(spark, index, ["merg", "sort"], k=8,
+                                  important_weight=2.5)) == boosted
+    assert rows(bm25f_topk_tokens(spark, index, ["merg", "sort"], k=8,
+                                  important_weight=1.0)) == \
+        rows(bm25_topk_tokens(spark, index, ["merg", "sort"], k=8))
+    assert bm25_topk_tokens(spark, index, [], k=8).count() == 0
+    assert bm25_topk_tokens(
         spark, index, ["zzz_unknown_term"], k=8).count() == 0
     with Searcher(spark, index, cache_postings=False) as s:
-        assert rows(s.bm25_colocated("merge sort", k=8)) == \
-            rows(s.bm25("merge sort", k=8))
+        _assert_oracle(rows(s.bm25("merge sort", k=8)),
+                       oracle.bm25_topk("merge sort", k=8))
+
+
+def test_searcher_algebra_matches_oracle(spark, index, oracle, meta):
+    """The warm surfaces that filter the full scored set before their
+    top-k — after (page 1 and the cursor's page 2), filtered, collapse
+    and boolean must/exclude — each equal the oracle recomputed from
+    its own full score set and the corpus metadata."""
+    from spidey_search_engine_spark.operators.search import Searcher
+
+    bag = ["merg", "sort", "hash"]
+    full = oracle.bm25_scores(bag)
+    with Searcher(spark, index, cache_postings=True, coalesce_to=4) as s:
+        p1 = s.after(bag, k=8).collect()
+        p2 = s.after(bag, k=8, after=(p1[-1]["score"],
+                                      p1[-1]["doc_id"])).collect()
+        _assert_oracle([(r["doc_id"], r["score"]) for r in p1 + p2],
+                       oracle.ranked(full, 16))
+
+        got = [(r["doc_id"], r["score"]) for r in
+               s.filtered(bag, {"lang": "py"}, k=8).collect()]
+        _assert_oracle(got, oracle.ranked(
+            {d: v for d, v in full.items() if meta[d][0] == "py"}, 8))
+        assert got
+
+        groups: dict[str, list[tuple[int, float]]] = {}
+        for d, v in full.items():
+            groups.setdefault(meta[d][1], []).append((d, v))
+        best = {}  # representative doc -> (score, repo, group size)
+        for repo, members in groups.items():
+            (d, v), = oracle.ranked(dict(members), 1)
+            best[d] = (v, repo, len(members))
+        want = oracle.ranked({d: b[0] for d, b in best.items()}, 8)
+        got = s.collapse(bag, "repo", k=8).collect()
+        _assert_oracle([(r["doc_id"], r["score"]) for r in got], want)
+        assert [(r["repo"], r["group_size"]) for r in got] == \
+            [best[d][1:] for d, _ in want]
+
+        tf = oracle.tf
+        got = [(r["doc_id"], r["score"]) for r in
+               s.boolean(bag, must=["merg"], exclude=["scan"],
+                         k=8).collect()]
+        _assert_oracle(got, oracle.ranked(
+            {d: v for d, v in full.items()
+             if tf[d].get("merg") and not tf[d].get("scan")}, 8))
+        assert got

@@ -1,70 +1,35 @@
-"""Warm solo-BM25 routing (Searcher.bm25 auto-selects plain vs the
-segment-colocated kernel from the stored doc count — the ROUTE
-discipline)."""
+"""Solo BM25 has one route: the cold CLI default path, the operator and
+the warm Searcher all score on the segment-colocated kernel and print the
+brute-force oracle's answer."""
 
-import os
+import json
 
-import pytest
-
-
-@pytest.fixture()
-def searcher(spark, index):
-    from spidey_search_engine_spark.operators.search import Searcher
-    s = Searcher(spark, index, cache_postings=True, coalesce_to=4)
-    yield s
-    s.close()
+from tests.oracle import OracleIndex
 
 
-def test_route_boundary_from_metadata(searcher, monkeypatch):
-    # the 400-doc test index sits under the default floor → plain
-    assert searcher._solo_route() == "plain"
-    monkeypatch.setenv("SPIDEY_COLO_MIN_DOCS", "400")
-    assert searcher._solo_route() == "colocated"
-    monkeypatch.setenv("SPIDEY_COLO_MIN_DOCS", "401")
-    assert searcher._solo_route() == "plain"
-    # explicit env route overrides the metadata decision
-    monkeypatch.setenv("SPIDEY_SOLO_ROUTE", "colocated")
-    assert searcher._solo_route() == "colocated"
-
-
-def test_routes_rank_identical(spark, searcher):
-    q = "merge sort lookup"
-    plain = [(r["doc_id"], round(r["score"], 9))
-             for r in searcher.bm25(q, k=10, route="plain").collect()]
-    colo = [(r["doc_id"], round(r["score"], 9))
-            for r in searcher.bm25(q, k=10, route="colocated").collect()]
-    auto = [(r["doc_id"], round(r["score"], 9))
-            for r in searcher.bm25(q, k=10).collect()]
-    assert plain == colo == auto
-    assert len(plain) == 10
-
-
-def test_cli_default_path_routes_identically(spark, index_dir, capsys,
-                                             monkeypatch):
-    """The CLI default query path routes by the same metadata floor;
-    forced plain and forced colocated print identical rows (the 400-doc
-    test index sits below the floor, so auto == plain there)."""
-    import json
-
+def test_cli_default_path_routes_identically(spark, index, index_dir,
+                                             corpus_pdf, capsys):
+    """`query --q` (the CLI default path), bm25_topk and Searcher.bm25
+    return the oracle's top-k: doc ids and ranks exact, scores to 9
+    decimals."""
     from spidey_search_engine_spark.cli import main
+    from spidey_search_engine_spark.operators.search import (Searcher,
+                                                             bm25_topk)
 
-    def rows():
-        # the two kernels sum partials in different orders (hash agg vs
-        # term-ordered fold): scores agree at 9 decimals, not bitwise —
-        # the same contract the operator-level identity tests pin
-        return [(d["doc_id"], round(d["score"], 9)) for d in
-                (json.loads(ln) for ln in
-                 capsys.readouterr().out.strip().splitlines())]
+    ordered = corpus_pdf.sort_values(["repo", "path"]).reset_index(drop=True)
+    oracle = OracleIndex(list(zip(range(len(ordered)), ordered["path"],
+                                  ordered["content"])), profile="code")
+    want = [(d, round(s, 9)) for d, s in oracle.bm25_topk("merge sort", 8)]
+    assert len(want) == 8
 
     assert main(["query", "--index", index_dir, "--q", "merge sort",
                  "--k", "8"]) == 0
-    auto = rows()
-    monkeypatch.setenv("SPIDEY_SOLO_ROUTE", "plain")
-    assert main(["query", "--index", index_dir, "--q", "merge sort",
-                 "--k", "8"]) == 0
-    plain = rows()
-    monkeypatch.setenv("SPIDEY_SOLO_ROUTE", "colocated")
-    assert main(["query", "--index", index_dir, "--q", "merge sort",
-                 "--k", "8"]) == 0
-    colo = rows()
-    assert auto == plain == colo and len(plain) == 8
+    cli = [(d["doc_id"], round(d["score"], 9)) for d in
+           (json.loads(ln) for ln in
+            capsys.readouterr().out.strip().splitlines())]
+    op = [(r["doc_id"], round(r["score"], 9)) for r in
+          bm25_topk(spark, index, "merge sort", k=8).collect()]
+    with Searcher(spark, index, cache_postings=True, coalesce_to=4) as s:
+        warm = [(r["doc_id"], round(r["score"], 9)) for r in
+                s.bm25("merge sort", k=8).collect()]
+    assert cli == op == warm == want
